@@ -51,13 +51,23 @@ def _materialized_rowcount(df: DataFrame, limit: int) -> int | None:
         return None
 
 
+def _broadcast_participants(pairs: DataFrame, known_pair_count: int | None) -> bool:
+    """Whether the pair participants fit the broadcast semi-join prune:
+    ``known_pair_count`` when the caller already counted the pairs (the
+    pipeline's stage manifest), else one count of a materialized table."""
+    if known_pair_count is not None:
+        return known_pair_count <= BROADCAST_PRUNE_PAIR_LIMIT
+    return _materialized_rowcount(pairs, BROADCAST_PRUNE_PAIR_LIMIT) is not None
+
+
 def shingle_table(sig: DataFrame) -> DataFrame:
     """(doc_id, shingles) → long (doc_id, sid), ids already distinct per doc."""
     return sig.select("doc_id", F.explode("shingles").alias("sid"))
 
 
 def jaccard_edges(
-    pairs: DataFrame, sig: DataFrame, cfg: DedupConfig
+    pairs: DataFrame, sig: DataFrame, cfg: DedupConfig,
+    known_pair_count: int | None = None,
 ) -> DataFrame:
     """Exact Jaccard for each candidate pair; keep >= threshold.
 
@@ -73,6 +83,9 @@ def jaccard_edges(
     explode form (``jaccard_edges_exploded``, kept for cross-checking):
     shingle ids are distinct per doc, so ``size(array_intersect)`` equals
     the exploded match count exactly.
+
+    ``known_pair_count``: callers that already know |pairs| pass it, and
+    the broadcast decision below runs no count job.
     """
     # no distinct() on the participant ids: a LEFT SEMI join is set-semantic
     # over its right side already, so deduplicating it first only added an
@@ -88,10 +101,10 @@ def jaccard_edges(
     # (doc_id, shingles) projection before AQE could see the tiny side:
     # AQE materializes both sides of a join before converting to
     # broadcast).  A web-scale pair table (> BROADCAST_PRUNE_PAIR_LIMIT)
-    # or an unmaterialized pairs argument falls through to the shuffle
-    # plan unchanged.  Same result either way — only the join strategy
-    # moves.
-    if _materialized_rowcount(pairs, BROADCAST_PRUNE_PAIR_LIMIT) is not None:
+    # or an unmaterialized, uncounted pairs argument falls through to the
+    # shuffle plan unchanged.  Same result either way — only the join
+    # strategy moves.
+    if _broadcast_participants(pairs, known_pair_count):
         cand_docs = F.broadcast(cand_docs.distinct())
     pruned = (
         sig.select("doc_id", "shingles")
@@ -183,7 +196,7 @@ def containment_edges(
         .unionByName(pairs.select(F.col("dst").alias("doc_id")))
         # no distinct(): left-semi join is set-semantic over its right side
     )
-    if _materialized_rowcount(pairs, BROADCAST_PRUNE_PAIR_LIMIT) is not None:
+    if _broadcast_participants(pairs, None):
         # see jaccard_edges: broadcast the participant ids of a small,
         # already-materialized pair table so the signature table streams
         # without an exchange

@@ -71,8 +71,11 @@ class DedupPipeline:
             m = self.store.manifest(name)
             # compare against the STORE fingerprint (== cfg.to_json() for
             # the dedup stages; span stages append their own params so a
-            # min_match change cannot silently resume stale spans)
-            if m.get("config") == self.store.config_fingerprint:
+            # min_match change cannot silently resume stale spans); a
+            # manifest without a recorded schema predates schema-recorded
+            # reads, so the idempotent stage is rebuilt
+            if (m.get("config") == self.store.config_fingerprint
+                    and "schema_json" in m):
                 self.metrics[name] = {"rows": m["rows"], "resumed": True}
                 return self.store.read(name)
             # config changed → stale checkpoint is not reusable
@@ -158,7 +161,12 @@ class DedupPipeline:
         )
         edges = self._stage(
             "edges",
-            lambda: V.jaccard_edges(pairs, sig, cfg),
+            # the candidate_pairs manifest already counted the pairs, so the
+            # verify join strategy needs no count job of its own
+            lambda: V.jaccard_edges(
+                pairs, sig, cfg,
+                known_pair_count=self.metrics["candidate_pairs"]["rows"],
+            ),
             ("candidate_pairs", "signatures"),
             resume,
         )

@@ -5,8 +5,26 @@ The reference persists engine state atomically (bincode dump
 `lsh-rs/src/table/sqlite.rs:202-213`).  Our unit of durability is a
 *pipeline stage*: each stage's DataFrame is written once and sealed with an
 atomically-renamed ``_COMMITTED.json`` manifest carrying row counts,
-per-partition lineage counters, config fingerprint and parent stages — the
-north rule's checkpoint/resume + lineage requirement.
+per-file lineage counters, the read-back schema, config fingerprint and
+parent stages — the north rule's checkpoint/resume + lineage requirement.
+
+Commit cost: a commit launches only the write's own Spark jobs, and
+reading a committed stage launches none (while a stage has no more
+partition directories than ``spark.sql.sources.parallelPartitionDiscovery
+.threshold``; past it Spark lists the files with a job).
+
+* ``rows`` is counted by the write itself: an ``Observation``
+  (``count(1)``) on the written plan runs in the write's result stage, so
+  accumulator updates count once even under task retry.
+* ``partition_rows`` holds the record count of each committed parquet
+  file, read on the driver from the file footers (pyarrow), so
+  ``sum(partition_rows.values()) == rows``; ``n_read_partitions`` is the
+  number of those files.  A catalog table has no files of ours to list;
+  its snapshot metadata carries that lineage.
+* ``schema_json`` is the schema a reader sees (data columns, then
+  partition columns, every field nullable); ``read`` passes it to the
+  parquet reader, so no schema-inference job runs.  A manifest without it
+  was written by an older version and is not resumed from.
 
 Backend selection: if the session has an Iceberg catalog configured
 (``spark.sql.catalog.*`` + runtime jar) tables go through it; otherwise a
@@ -26,10 +44,44 @@ import os
 import shutil
 import time
 from dataclasses import dataclass, field
+from urllib.parse import urlparse
+from urllib.request import url2pathname
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST = "_COMMITTED.json"
+
+#: Seconds to wait, after a write returned, for its row-count observation
+#: to arrive (it travels the listener bus).  A write that never executed
+#: the observed plan never delivers it, and the commit fails instead of
+#: hanging.
+ROWS_OBSERVATION_TIMEOUT_S = 60.0
+
+
+def _observed_rows(obs: Observation, timeout: float) -> int:
+    """The ``rows`` metric of ``obs``, waiting at most ``timeout`` seconds."""
+    done = obs._jo.future()
+    deadline = time.monotonic() + timeout
+    while not done.isCompleted():
+        if time.monotonic() > deadline:
+            raise RuntimeError(
+                f"no row count observed within {timeout:.0f} s of the write "
+                "returning — the write did not execute the plan it was given"
+            )
+        time.sleep(0.002)
+    return obs.get["rows"]
+
+
+def _file_rows(files: list[str], base: str) -> dict[str, int]:
+    """Record count of each parquet file (keyed by its path under
+    ``base``), read on the driver from the file footers."""
+    rows = {}
+    for uri in files:
+        path = url2pathname(urlparse(uri).path)
+        rows[os.path.relpath(path, base)] = pq.ParquetFile(path).metadata.num_rows
+    return rows
 
 
 def _iceberg_catalog(spark: SparkSession) -> str | None:
@@ -140,28 +192,31 @@ class StageStore:
         the SAME manifest (written after the data commit, so a crash
         between data and manifest reruns the idempotent stage write)."""
         t0 = time.time()
+        # observed below the local sort: no exchange between it and the
+        # write, so it still counts in the write's result stage, and the
+        # sort stays visible to the optimizer's redundant-sort rules
+        obs = Observation()
+        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
         if sort_within:
             df = df.sortWithinPartitions(*sort_within)
         if self.use_iceberg:
             written = self._write_iceberg(df, name, partition_by)
         else:
             written = self._write_parquet(df, name, partition_by)
-        # lineage counters from the committed bytes, not the plan
-        per_part = (
-            written.groupBy(F.spark_partition_id().alias("pid"))
-            .count()
-            .collect()
-        )
+        rows = _observed_rows(obs, ROWS_OBSERVATION_TIMEOUT_S)
+        # lineage counters from the committed files, not the plan
+        file_rows = _file_rows(written.inputFiles(), self._dir(name) + ".tmp")
         manifest = {
             "stage": name,
             "backend": "iceberg" if self.use_iceberg else "parquet",
             "table": self._identifier(name) if self.use_iceberg else None,
-            "rows": sum(r["count"] for r in per_part),
-            "n_read_partitions": len(per_part),
-            "partition_rows": {str(r["pid"]): r["count"] for r in per_part},
+            "rows": rows,
+            "n_read_partitions": len(file_rows),
+            "partition_rows": file_rows,
             "parents": list(parents),
             "config": self.config_fingerprint,
             "schema": written.schema.simpleString(),
+            "schema_json": written.schema.json(),
             "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "write_seconds": round(time.time() - t0, 3),
             "counters": counters or {},
@@ -182,7 +237,12 @@ class StageStore:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(tmp)
-        return self.spark.read.parquet(tmp)
+        # what inference would report: partition columns last (they keep
+        # their written type), and the file source makes every field
+        # nullable
+        data = [f for f in df.schema if f.name not in partition_by]
+        schema = StructType(data + [df.schema[c] for c in partition_by])
+        return self.spark.read.schema(schema).parquet(tmp)
 
     def _write_iceberg(
         self, df: DataFrame, name: str, partition_by: tuple[str, ...]
@@ -232,7 +292,14 @@ class StageStore:
             raise FileNotFoundError(f"stage {name!r} not committed under {self.root}")
         if self.use_iceberg:
             return self.spark.read.table(self._identifier(name))
-        return self.spark.read.parquet(self._dir(name))
+        recorded = self.manifest(name).get("schema_json")
+        if recorded is None:
+            raise ValueError(
+                f"stage {name!r} under {self.root} was committed without a "
+                "recorded schema (an older manifest); rewrite the stage"
+            )
+        schema = StructType.fromJson(json.loads(recorded))
+        return self.spark.read.schema(schema).parquet(self._dir(name))
 
     def drop(self, name: str) -> None:
         if self.use_iceberg:

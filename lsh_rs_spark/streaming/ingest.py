@@ -18,6 +18,7 @@ streaming exact-dedup of the incoming page stream.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from lsh_rs_spark.config import DedupConfig
 from lsh_rs_spark.operators.lsh import explode_bands, signatures
@@ -88,16 +89,22 @@ def stream_exact_dedup(pages: DataFrame, delay: str = "10 minutes") -> DataFrame
     )
 
 
-def _read_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
-    """spark.read.parquet(path) or None if the path does not exist.
+def _read_if_exists(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame | None:
+    """The parquet store at ``path``, or None if the path does not exist.
 
-    Probes through Spark (AnalysisException on a missing path) rather than
-    driver-local ``os.path.exists`` — on HDFS/S3 a local stat would read an
-    existing store as absent and silently skip the new-vs-stored probe."""
+    ``schema`` is the store's schema, which the caller knows from the
+    micro-batch it appends; with it the read runs no schema-inference job
+    (a missing path still raises PATH_NOT_FOUND).  Probes through Spark
+    (AnalysisException on a missing path) rather than driver-local
+    ``os.path.exists`` — on HDFS/S3 a local stat would read an existing
+    store as absent and silently skip the new-vs-stored probe."""
     from pyspark.errors import AnalysisException
 
+    reader = spark.read if schema is None else spark.read.schema(schema)
     try:
-        df = spark.read.parquet(path)
+        df = reader.parquet(path)
         df.schema  # force resolution now, not at first action
         return df
     except AnalysisException:
@@ -180,8 +187,11 @@ def _incremental_processor(
         )
 
         # -- incremental hot-set maintenance (O(batch) + O(hot)) ---------
-        prev_hot = _read_if_exists(spark, hot_dir)
-        counts_log = _read_if_exists(spark, counts_dir)
+        # every store's schema is the batch's own (the format marker pins
+        # it), so no read below infers one
+        prev_hot = _read_if_exists(
+            spark, hot_dir, new_buckets.select(*KEY).schema)
+        counts_log = _read_if_exists(spark, counts_dir, batch_counts.schema)
         if counts_log is not None:
             # cumulative sizes for THIS batch's keys only: count-log scan
             # restricted by a broadcast semi-join on the batch keys (3 int
@@ -222,7 +232,7 @@ def _incremental_processor(
         metrics["probe_rows_skipped_hot"] = hot_new.count()
         probed = new_buckets.join(F.broadcast(hot), KEY, "left_anti")
         intra = pairs_from_buckets(probed, KEY, max_bucket_size)
-        store = _read_if_exists(spark, buckets_dir)
+        store = _read_if_exists(spark, buckets_dir, new_buckets.schema)
         if store is not None:
             store = store.join(F.broadcast(hot), KEY, "left_anti")
             probe = probed.alias("nb").join(
@@ -235,9 +245,9 @@ def _incremental_processor(
                 F.greatest("src_new", "dst_old").alias("dst"),
             ).distinct()
             pairs = probe.unionByName(intra).distinct()
-            all_sig = spark.read.parquet(sig_dir).unionByName(
-                sig.select(*sig_cols)
-            )
+            new_sig = sig.select(*sig_cols)
+            all_sig = (spark.read.schema(new_sig.schema).parquet(sig_dir)
+                       .unionByName(new_sig))
         else:
             pairs = intra
             all_sig = sig
@@ -252,7 +262,7 @@ def _incremental_processor(
             newly_hot.write.mode("append").parquet(hot_dir)
         if compact_every and (batch_id + 1) % compact_every == 0:
             compacted = (
-                spark.read.parquet(counts_dir)
+                spark.read.schema(batch_counts.schema).parquet(counts_dir)
                 .groupBy(*KEY)
                 .agg(F.sum("n").alias("n"))
                 .localCheckpoint(eager=True)  # sever lineage before overwrite

@@ -329,7 +329,14 @@ def test_stage_store_iceberg_seal_ignores_stale_parquet_tmp(spark, tmp_path, mon
     store = StageStore(spark, str(tmp_path / "ice"))
     store._catalog = "ice"
     store.use_iceberg = True
-    monkeypatch.setattr(store, "_write_iceberg", lambda df, name, pb: df)
+
+    def fake_iceberg(df, name, partition_by):
+        # executes the plan like a real table write, so the write-time row
+        # count is observed; keeps no data
+        df.write.format("noop").mode("overwrite").save()
+        return df
+
+    monkeypatch.setattr(store, "_write_iceberg", fake_iceberg)
 
     # plant a stale parquet-mode tmp with recognizable junk
     stale = tmp_path / "ice" / "stage9.tmp"
@@ -344,6 +351,85 @@ def test_stage_store_iceberg_seal_ignores_stale_parquet_tmp(spark, tmp_path, mon
     assert sorted(os.listdir(out)) == [MANIFEST]    # marker only, no junk swap
     assert json.load(open(out / MANIFEST))["stage"] == "stage9"
     assert store.is_committed("stage9")
+
+
+def test_stage_store_commit_runs_only_the_write(spark, tmp_path):
+    """A commit launches only the write's own Spark jobs and a read
+    launches none; the manifest's row count, per-file counters and
+    recorded schema agree with the committed data."""
+    import itertools
+
+    from lsh_rs_spark.sources.storage import StageStore
+
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def jobs_of(fn):
+        group = f"commit-cost-{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    store = StageStore(spark, str(tmp_path / "s"))
+    df = spark.range(0, 2000, 1, 4).select(
+        (F.col("id") % 5).cast("int").alias("band_idx"),
+        F.xxhash64("id").alias("band_key"),
+        F.col("id").alias("doc_id"),
+        F.array(F.col("id"), F.lit(1).cast("long")).alias("ids"),
+    )
+    for name, kw in (
+        ("banded", dict(partition_by=("band_idx",), sort_within=("band_key",))),
+        ("plain", {}),
+    ):
+        # the same write issued directly: the jobs a commit may launch
+        direct = df
+        if kw:
+            direct = df.sortWithinPartitions(*kw["sort_within"])
+        writer = direct.write.partitionBy(*kw.get("partition_by", ()))
+        _, own_jobs = jobs_of(lambda: writer.parquet(str(tmp_path / f"ref_{name}")))
+        m, write_jobs = jobs_of(lambda: store.write(df, name, **kw))
+        back, read_jobs = jobs_of(lambda: store.read(name))
+        assert write_jobs == own_jobs, (name, write_jobs, own_jobs)
+        assert read_jobs == 0, name
+
+        assert m["rows"] == back.count() == 2000
+        assert sum(m["partition_rows"].values()) == m["rows"]
+        assert m["n_read_partitions"] == len(m["partition_rows"]) > 0
+        inferred = spark.read.parquet(str(tmp_path / "s" / name)).schema
+        assert back.schema == inferred
+        assert m["schema"] == inferred.simpleString()
+    assert list(back.columns) == ["band_idx", "band_key", "doc_id", "ids"]
+    assert store.read("banded").columns[-1] == "band_idx"
+
+
+def test_pipeline_reruns_stage_without_recorded_schema(spark, tmp_path):
+    """A manifest written before schemas were recorded is not resumed
+    from: the idempotent stage is rebuilt and resealed with one."""
+    import json
+
+    from lsh_rs_spark.sources.storage import MANIFEST
+
+    docs = spark.createDataFrame(
+        [(i, f"doc number {i} body " + ("shared tail " * 8 if i < 4 else ""))
+         for i in range(12)],
+        "doc_id: long, text: string",
+    )
+    wd = tmp_path / "w"
+    DedupPipeline(spark, CFG, str(wd)).run(docs, resume=False)
+    path = wd / "signatures" / MANIFEST
+    m = json.load(open(path))
+    del m["schema_json"]
+    json.dump(m, open(path, "w"))
+
+    pipe = DedupPipeline(spark, CFG, str(wd))
+    pipe.run(docs, resume=True)
+    assert "resumed" not in pipe.metrics["signatures"]
+    assert pipe.metrics["exact_groups"].get("resumed") is True
+    assert "schema_json" in pipe.store.manifest("signatures")
 
 
 def test_auto_cc_shallow_graph_stays_on_hashmin(spark):
@@ -498,7 +584,8 @@ def test_auto_cc_spawns_no_count_jobs_and_single_collect(spark, monkeypatch):
 
 def test_pipeline_cc_stage_uses_manifest_counts(spark, tmp_path, monkeypatch):
     """The pipeline threads StageStore manifest row counts into
-    connected_components_auto so the CC stage never re-counts edges."""
+    connected_components_auto so the CC stage never re-counts edges, and
+    into jaccard_edges so verify never counts the candidate pairs."""
     from lsh_rs_spark.config import DedupConfig
     from lsh_rs_spark.operators import components as CC
     from lsh_rs_spark.plans.pipeline import DedupPipeline
@@ -511,6 +598,18 @@ def test_pipeline_cc_stage_uses_manifest_counts(spark, tmp_path, monkeypatch):
         return orig(edges, max_iters, **kw)
 
     monkeypatch.setattr(CC, "connected_components_auto", spying)
+    verify_kw = {}
+    orig_verify = V.jaccard_edges
+
+    def spying_verify(pairs, sig, cfg, **kw):
+        verify_kw.update(kw)
+        return orig_verify(pairs, sig, cfg, **kw)
+
+    def no_count(df, limit):
+        raise AssertionError("verify counted the candidate pairs")
+
+    monkeypatch.setattr(V, "jaccard_edges", spying_verify)
+    monkeypatch.setattr(V, "_materialized_rowcount", no_count)
     docs = spark.createDataFrame(
         [(i, f"doc number {i} body " + ("shared tail " * 8 if i < 4 else ""))
          for i in range(12)],
@@ -524,6 +623,8 @@ def test_pipeline_cc_stage_uses_manifest_counts(spark, tmp_path, monkeypatch):
     assert seen["known_edge_count"] == (
         pipe.metrics["edges"]["rows"] + pipe.metrics["exact_groups"]["rows"]
     )
+    # verify takes its pair count from the candidate_pairs manifest too
+    assert verify_kw["known_pair_count"] == pipe.metrics["candidate_pairs"]["rows"]
 
 
 def test_auto_cc_driver_fast_path_matches_distributed(spark):
