@@ -84,7 +84,9 @@ def _edges(spark, sf_dir):
 
 
 def _components(spark, sf_dir):
-    return CC.connected_components(_edges(spark, sf_dir), CFG.cc_max_iters)
+    # pinned to hash-min (the dup_components gate's algorithm); labels left
+    # unconverged by the round budget would fail the oracle comparison
+    return CC.hashmin_components(_edges(spark, sf_dir), CFG.cc_max_iters)[0]
 
 
 # ---------------------------------------------------------------------------
@@ -215,7 +217,7 @@ def q_exact_dup_edges(spark, sf_dir):
 def q_dup_components_star(spark, sf_dir):
     # same transitive closure, computed by large-star/small-star instead of
     # hash-min — both gated against the identical recursive-CTE oracle
-    return CC.connected_components_star(_edges(spark, sf_dir))
+    return CC.star_components(_edges(spark, sf_dir), CFG.cc_max_iters)[0]
 
 
 def q_simhash_signatures(spark, sf_dir):

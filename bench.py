@@ -78,7 +78,7 @@ def dedup_pipeline_count(docs, cfg) -> int:
                 F.greatest("rep_id", "doc_id").alias("dst"),
             )
         )
-        comps = CC.resolve_cc(cfg.cc_algorithm)(all_edges, cfg.cc_max_iters)
+        comps, _ = CC.connected_components(all_edges, cfg.cc_max_iters)
         keep = CC.dedup_representatives(
             CC.with_singletons(comps, docs.where(F.col("text").isNotNull()))
         )
@@ -94,9 +94,9 @@ def main() -> None:
         .appName("lsh-rs-spark-bench")
         # sized by DATA (largest benched corpus), not cores: partitions =
         # cores exactly put a task's sort over its execution-memory share
-        # and spilled on the heavy exchanges (round-6 stage_bytes A/B:
-        # zero spill and -18% wall at 64 MB-target sizing; AQE coalesces
-        # any overshoot) — see tuning.suggest_shuffle_partitions
+        # and spilled on the heavy exchanges (round-6 A/B recorded in
+        # BASELINE.md: zero spill and -18% wall at 64 MB-target sizing; AQE
+        # coalesces any overshoot) — see tuning.suggest_shuffle_partitions
         .config(
             "spark.sql.shuffle.partitions",
             str(suggest_shuffle_partitions(SYNTH_PAGES * 10, CPUS)),

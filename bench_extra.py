@@ -117,7 +117,7 @@ def profile(spark):
                     F.greatest("rep_id", "doc_id").alias("dst"),
                 )
             )
-            comps = CC.resolve_cc(cfg.cc_algorithm)(all_edges, cfg.cc_max_iters)
+            comps, _ = CC.connected_components(all_edges, cfg.cc_max_iters)
             keep = CC.dedup_representatives(
                 CC.with_singletons(comps, corpus.where(F.col("text").isNotNull()))
             )

@@ -30,7 +30,7 @@ from lsh_rs_spark.operators import simhash_ops as SH
 from lsh_rs_spark.operators import topk as TK
 from lsh_rs_spark.operators import verify as V
 from lsh_rs_spark.operators.components import (
-    connected_components_auto,
+    connected_components,
     dedup_representatives,
     with_singletons,
 )
@@ -112,12 +112,10 @@ class MinHashLSH:
 
     def dedup(self, docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
         """Full clustering: (doc_id, cluster_id, is_representative)."""
-        from lsh_rs_spark.operators.components import resolve_cc
-
         self.fit(docs, id_col=id_col)
         pairs = L.candidate_pairs(self._buckets, self.cfg)
         edges = V.jaccard_edges(pairs, self._sig, self.cfg)
-        comps = resolve_cc(self.cfg.cc_algorithm)(edges, self.cfg.cc_max_iters)
+        comps, _ = connected_components(edges, self.cfg.cc_max_iters)
         return dedup_representatives(with_singletons(comps, self._sig))
 
     def bucket_stats(self) -> DataFrame:
@@ -158,7 +156,7 @@ class SimHashLSH:
         MinHashLSH.dedup, so the two families are drop-in replacements."""
         self.fit(docs, id_col=id_col)
         edges = self.near_dup_pairs()
-        comps = connected_components_auto(edges, cc_max_iters)
+        comps, _ = connected_components(edges, cc_max_iters)
         return dedup_representatives(with_singletons(comps, self._sketches))
 
 

@@ -72,15 +72,11 @@ class DedupConfig:
     jaccard_threshold: float = 0.7    # exact-verify threshold for edges
     max_bucket_size: int = 2000       # skew guard: buckets larger than this
                                       # are dropped (counted, never silent)
-    cc_max_iters: int = 25
-    cc_algorithm: str = "auto"        # "auto" (default): hash-min for a few
-                                      # rounds, then large/small-star on the
-                                      # label-contracted graph if not yet
-                                      # converged — shallow graphs pay pure
-                                      # hash-min cost, long boilerplate chains
-                                      # finish in O(log n) rounds; "hashmin"/
-                                      # "star" force one algorithm (identical
-                                      # labels in every case)
+    cc_max_iters: int = 25            # round budget of connected
+                                      # components' star pass (it raises
+                                      # when exhausted); which CC path ran
+                                      # is reported in the components
+                                      # manifest, not configured
 
     def __post_init__(self) -> None:
         if self.bands * self.rows_per_band != self.num_perm:
@@ -94,8 +90,6 @@ class DedupConfig:
             raise ValueError(f"shingle_mode must be one of {SHINGLE_MODES}")
         if self.minhash_mode not in ("kperm", "oph"):
             raise ValueError("minhash_mode must be 'kperm' or 'oph'")
-        if self.cc_algorithm not in ("hashmin", "star", "auto"):
-            raise ValueError("cc_algorithm must be 'hashmin', 'star' or 'auto'")
 
     @property
     def threshold_estimate(self) -> float:

@@ -1,24 +1,38 @@
 """Connected components over the verified edge table → cluster ids.
 
 Absent in the reference (it stops at candidate buckets; SURVEY.md §2.11) —
-required by the north rule.  Algorithm: iterative **hash-min label
-propagation** (the standard Spark CC construction; converges in O(diameter)
-rounds, and near-dup clusters are shallow).  Each iteration:
+required by the north rule.  Cluster id = min doc_id reachable.
 
-    label'(v) = min(label(v), min over neighbors u of label(u))
+One entry, :func:`connected_components`, returns ``(labels, report)``.  It
+composes two distributed algorithms with a driver fast path:
 
-Driver loops with ``localCheckpoint`` per round to truncate lineage
-(Catalyst does not iterate; SURVEY.md §4.2) and stops when no label
-changed or ``cc_max_iters`` is hit.  Cluster id = min doc_id reachable.
+* a bounded driver union-find for graphs of at most
+  :data:`DRIVER_EDGE_LIMIT` edges;
+* **hash-min label propagation** (:func:`hashmin_components`, the
+  standard Spark CC construction), O(diameter) rounds —
+  ``label'(v) = min(label(v), min over neighbors u of label(u))``;
+* **large-star / small-star** (:func:`star_components`), O(log n) rounds
+  on the graph hash-min leaves unconverged.
 
-At 100 TB scale the edge table is repartitioned once on ``src`` and reused
-every round; label updates shuffle only the (node, label) pairs, which is
-orders of magnitude smaller than the documents.
+Both loops ``localCheckpoint`` every round to truncate lineage (Catalyst
+does not iterate; SURVEY.md §4.2).  At 100 TB scale the edge table is
+repartitioned once on ``src`` and reused every round; label updates
+shuffle only the (node, label) pairs, orders of magnitude smaller than
+the documents.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
+
+#: Edge count at or under which the graph is solved by a union-find on the
+#: driver: 2 ids/edge collected, ≤ ~1.6 MB, ~0.2 s instead of O(rounds)
+#: Spark jobs (~0.45 s/round) — the bulk of small-corpus dedup latency.
+DRIVER_EDGE_LIMIT = 100_000
+
+#: Hash-min rounds before an unconverged graph is contracted through its
+#: partial labels and finished by star.
+HASHMIN_ROUNDS = 8
 
 
 def symmetrize(edges: DataFrame) -> DataFrame:
@@ -34,22 +48,17 @@ def symmetrize(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iters: int = 25,
-    checkpoint: bool = True,
-    strict: bool = True,
-) -> DataFrame:
-    """edges(src,dst) → (doc_id, cluster_id) for every node in the graph.
+def hashmin_components(
+    edges: DataFrame, max_rounds: int
+) -> tuple[DataFrame, int | None]:
+    """edges(src,dst) → ((doc_id, cluster_id) for every node, rounds).
 
-    Hash-min propagates one hop per iteration, so convergence needs
-    O(component diameter) rounds.  If ``max_iters`` is exhausted while
-    labels are still changing the result is WRONG for the unconverged
-    components — with ``strict`` (default) that raises instead of silently
-    returning partial labels; callers that prefer best-effort labels pass
-    ``strict=False`` and should surface the non-convergence in their run
-    manifest (``connected_components.last_converged_in`` holds the round
-    count of the most recent call, or None if it hit the cap).
+    Hash-min propagates one hop per round, so convergence needs
+    O(component diameter) rounds.  ``rounds`` is the round that found the
+    fixpoint, or None when ``max_rounds`` ran out while labels were still
+    changing — the labels of the unconverged components are then partial
+    (still ≥ the component minimum, which :func:`connected_components`
+    relies on when it contracts the graph).
     """
     # localCheckpoint (not just persist): the edge lineage can be a large
     # diamond-shaped plan (e.g. verified edges ∪ exact-dup edges sharing
@@ -63,7 +72,6 @@ def connected_components(
         .withColumn("cluster_id", F.col("doc_id"))
         .persist()
     )
-    connected_components.last_converged_in = None
 
     # The cheap convergence check (exact decimal label-sum scan) is only
     # sound for integral ids: a non-numeric id (e.g. string doc ids) casts
@@ -75,11 +83,9 @@ def connected_components(
     numeric_ids = id_type in ("tinyint", "smallint", "int", "bigint") or (
         id_type.startswith("decimal")
     )
-
-    def label_sum(df: DataFrame):
-        # exact decimal sum — int64 doc ids summed over billions of rows
-        # would overflow a BIGINT accumulator
-        return df.agg(F.sum(F.col("cluster_id").cast("decimal(38,0)"))).first()[0]
+    # exact decimal sum — int64 doc ids summed over billions of rows would
+    # overflow a BIGINT accumulator
+    label_sum = F.sum(F.col("cluster_id").cast("decimal(38,0)"))
 
     def n_changed(old: DataFrame, new: DataFrame) -> int:
         return (
@@ -89,8 +95,9 @@ def connected_components(
             .count()
         )
 
-    prev_sum = label_sum(labels) if numeric_ids else None
-    for it in range(max_iters):
+    prev_sum = labels.agg(label_sum).first()[0] if numeric_ids else None
+    rounds = None
+    for it in range(max_rounds):
         # hash-min step in one join + one aggregation (2 shuffles/iter):
         # labels flow across edges, union the node's own label, take min
         flowed = sym.join(labels.withColumnRenamed("doc_id", "src"), "src").select(
@@ -101,28 +108,18 @@ def connected_components(
             .groupBy("doc_id")
             .agg(F.min("cluster_id").alias("cluster_id"))
         )
-        # convergence check via one cheap scan, not a self-join: hash-min
-        # labels are monotonically non-increasing per node, so the exact
-        # label sum strictly decreases until the fixpoint —
-        # sum unchanged ⟺ no label changed.  (Non-integral ids take the
-        # join-based changed-count instead — see dispatch above.)
-        # When checkpointing, the sum rides the checkpoint job as an
-        # observe() metric: ONE job per round instead of two, no second
-        # scan over the labels (scaling: per-round driver latency is the
-        # non-parallel term of the CC stage).
-        obs = None
-        if numeric_ids and checkpoint:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            new_labels = new_labels.observe(
-                obs,
-                F.sum(F.col("cluster_id").cast("decimal(38,0)")).alias("ls"),
-            )
-        if checkpoint:
-            new_labels = new_labels.localCheckpoint(eager=True)
+        # convergence check without a self-join: hash-min labels are
+        # monotonically non-increasing per node, so the exact label sum
+        # strictly decreases until the fixpoint — sum unchanged ⟺ no label
+        # changed.  The sum rides the checkpoint job as an observe()
+        # metric: ONE job per round (scaling: per-round driver latency is
+        # the non-parallel term of the CC stage).
         if numeric_ids:
-            new_sum = obs.get["ls"] if obs is not None else label_sum(new_labels)
+            obs = Observation()
+            new_labels = new_labels.observe(obs, label_sum.alias("ls"))
+        new_labels = new_labels.localCheckpoint(eager=True)
+        if numeric_ids:
+            new_sum = obs.get["ls"]
             converged = new_sum == prev_sum
             prev_sum = new_sum
         else:
@@ -130,30 +127,19 @@ def connected_components(
         labels.unpersist()
         labels = new_labels
         if converged:
-            connected_components.last_converged_in = it + 1
+            rounds = it + 1
             break
-    else:
-        if strict:
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iters} "
-                "iterations — some components have diameter > max_iters and "
-                "their cluster_ids are wrong; raise max_iters (or pass "
-                "strict=False to accept partial labels)."
-            )
-    return labels.select("doc_id", "cluster_id")
+    return labels.select("doc_id", "cluster_id"), rounds
 
 
-def connected_components_star(
-    edges: DataFrame, max_iters: int = 40, strict: bool = True
-) -> DataFrame:
+def star_components(edges: DataFrame, max_rounds: int) -> tuple[DataFrame, int]:
     """Alternating large-star / small-star connected components
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC'14) — converges in O(log n) rounds regardless of component
     diameter, where hash-min label propagation needs O(diameter) rounds.
-
-    Use this for graphs that may contain long chains (e.g. boilerplate
-    near-dup chains at web scale); output is identical to
-    ``connected_components`` (min doc_id per component).
+    Returns ``(labels, rounds)`` with the same labels as
+    :func:`hashmin_components` (min doc_id per component); raises if the
+    edge set is still changing after ``max_rounds``.
 
     Each round (2 shuffles, same per-round cost as hash-min):
       large-star: for each node u, neighbors v > u re-attach to min(N(u)∪u)
@@ -182,15 +168,14 @@ def connected_components_star(
     _cp_prev = spark.conf.get(_cp_key, "true")
     spark.conf.set(_cp_key, "false")
     try:
-        return _star_loop(e, max_iters, strict)
+        return _star_loop(e, max_rounds)
     finally:
         spark.conf.set(_cp_key, _cp_prev)
 
 
-def _star_loop(e: DataFrame, max_iters: int, strict: bool) -> DataFrame:
-    connected_components_star.last_converged_in = None
+def _star_loop(e: DataFrame, max_rounds: int) -> tuple[DataFrame, int]:
     prev_count = e.count()
-    for it in range(max_iters):
+    for it in range(max_rounds):
         # large-star: group by u over BOTH directions, attach larger
         # neighbors to the minimum of the neighborhood (including u).
         # Aggregate sides get disjoint column names (_mu/_mn, _su/_smn):
@@ -227,8 +212,6 @@ def _star_loop(e: DataFrame, max_iters: int, strict: bool) -> DataFrame:
             .where(F.col("v") != F.col("_smn"))
             .select(F.col("v").alias("u"), F.col("_smn").alias("v"))
         )
-        from pyspark.sql import Observation
-
         obs = Observation()
         new_e = (
             large.unionByName(small_self)
@@ -254,13 +237,12 @@ def _star_loop(e: DataFrame, max_iters: int, strict: bool) -> DataFrame:
         prev_count = new_count
         e = new_e
         if changed == 0:
-            connected_components_star.last_converged_in = it + 1
             break
     else:
-        if strict:
-            raise RuntimeError(
-                f"connected_components_star did not converge in {max_iters} rounds"
-            )
+        raise RuntimeError(
+            f"star connected components did not converge in {max_rounds} "
+            "rounds — raise max_iters"
+        )
     # converged: every u points directly at its component min
     labels = e.select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_id"))
     mins = e.select(F.col("v").alias("doc_id")).distinct().withColumn(
@@ -268,19 +250,32 @@ def _star_loop(e: DataFrame, max_iters: int, strict: bool) -> DataFrame:
     )
     return labels.unionByName(mins).groupBy("doc_id").agg(
         F.min("cluster_id").alias("cluster_id")
-    )
+    ), it + 1
 
 
-def _driver_union_find(edges: DataFrame, rows=None) -> DataFrame:
-    """Bounded driver-side union-find over a SMALL edge list (caller has
-    already bounded it — by a manifest count or a limit-probe).  Union-by-min
-    (the smaller root becomes parent) keeps the invariant root == component
-    minimum, so labels are identical to the distributed algorithms.  Collect
-    volume is 2 ids/edge, bounded by the caller's explicit threshold.
+def _small_edge_rows(edges: DataFrame, known_edge_count: int | None):
+    """The (src, dst) rows of ``edges`` if there are at most
+    :data:`DRIVER_EDGE_LIMIT` of them, else None.
 
-    ``rows``: pre-collected (src, dst) rows — when the caller already
-    materialized the edge list (the limit-probe path) the expensive verify
-    lineage is NOT re-executed here."""
+    With ``known_edge_count`` (the pipeline's StageStore manifests record
+    row counts at write time) the decision spawns no job.  Without it, one
+    bounded ``limit(DRIVER_EDGE_LIMIT + 1).collect()`` probe decides, and
+    its rows are the union-find's input — the expensive verify lineage
+    executes at most once either way, never count-then-collect, and on the
+    distributed path the probe's CollectLimit scans partitions
+    incrementally instead of running a full count."""
+    e = edges.select("src", "dst")
+    if known_edge_count is not None:
+        return e.collect() if known_edge_count <= DRIVER_EDGE_LIMIT else None
+    probe = e.limit(DRIVER_EDGE_LIMIT + 1).collect()
+    return probe if len(probe) <= DRIVER_EDGE_LIMIT else None
+
+
+def _driver_union_find(edges: DataFrame, rows: list) -> DataFrame:
+    """Union-find over the collected (src, dst) ``rows`` of a small edge
+    list.  Union-by-min (the smaller root becomes parent) keeps the
+    invariant root == component minimum, so labels are identical to the
+    distributed algorithms.  ``edges`` supplies the id type and session."""
     from pyspark.sql.types import StructField, StructType
 
     parent: dict = {}
@@ -291,8 +286,6 @@ def _driver_union_find(edges: DataFrame, rows=None) -> DataFrame:
             x = parent[x]
         return x
 
-    if rows is None:
-        rows = edges.select("src", "dst").collect()
     for r in rows:
         a, b = r[0], r[1]
         parent.setdefault(a, a)
@@ -332,80 +325,42 @@ def _driver_union_find(edges: DataFrame, rows=None) -> DataFrame:
     return spark.createDataFrame(labels, schema)
 
 
-def connected_components_auto(
+def connected_components(
     edges: DataFrame,
-    max_iters: int = 40,
-    hashmin_rounds: int = 8,
-    driver_edge_threshold: int = 100_000,
+    max_iters: int = 25,
     known_edge_count: int | None = None,
-) -> DataFrame:
-    """Hash-min with automatic large/small-star fallback — the scale
-    default (judge r4 item 4).
+) -> tuple[DataFrame, dict]:
+    """edges(src,dst) → ((doc_id, cluster_id) for every node, report).
 
-    Near-dup graphs are almost always shallow (a dup cluster's diameter is
-    tiny), so hash-min's O(diameter) rounds are the cheapest path — but a
-    boilerplate chain at web scale can have diameter ≫ any fixed round
-    budget.  Run hash-min for ``hashmin_rounds``; if it converged, done
-    (identical cost to plain hash-min).  Otherwise CONTRACT the graph
-    through the partial labels — every node collapses into its current
-    min-reachable label, inter-label edges survive — and finish with
-    star (O(log n) rounds) on the contracted graph, which is much smaller
-    than the original because hash-min already collapsed every shallow
-    region.  Labels are identical to either pure algorithm: after any
-    number of hash-min rounds the true component minimum m still has
-    label(m) == m (labels never go below the component min), so the star
-    pass over contracted nodes recovers the global minimum per component,
-    and joining back through the partial labels assigns it to every node.
+    ``report`` is ``{"path": "driver" | "hashmin" | "hashmin+star",
+    "rounds": int}`` — which path ran and how many distributed rounds it
+    took (hash-min plus star; 0 on the driver path).  The pipeline records
+    it in the ``components`` stage manifest.
 
-    ``driver_edge_threshold``: an edge list at or under this size is solved
-    by a bounded driver union-find instead — a near-dup graph of a few
-    thousand edges pays ~0.2 s instead of O(rounds) Spark jobs
-    (~0.45 s/round), which dominates small-corpus dedup latency.  The bound
-    is EXPLICIT (2 ids/edge collected, ≤ ~1.6 MB at the default) and 0
-    disables the path entirely; labels are provably identical (union-by-min
-    root == component minimum).
-
-    ``known_edge_count``: callers that already know |edges| (the pipeline's
-    StageStore manifests record row counts at write time) pass it here so
-    the path decision spawns ZERO extra jobs.  When unknown, the decision
-    uses a single bounded ``limit(threshold+1).collect()`` probe whose rows
-    are handed straight to the union-find — the expensive verify lineage
-    executes at most once either way (never the count-then-collect double
-    execution), and on the distributed path the probe's CollectLimit scans
-    partitions incrementally instead of running a full count.
-
-    ``fell_back`` / ``last_converged_in`` / ``path`` attributes record
-    which path ran for run manifests.
+    * At most :data:`DRIVER_EDGE_LIMIT` edges (``known_edge_count``, or a
+      bounded probe — see :func:`_small_edge_rows`): union-find on the
+      driver.
+    * Otherwise hash-min for :data:`HASHMIN_ROUNDS` rounds.  Near-dup
+      graphs are almost always shallow (a dup cluster's diameter is
+      tiny), so this usually converges and costs exactly plain hash-min.
+    * Else a boilerplate chain outran the budget: CONTRACT the graph
+      through the partial labels — every node collapses into its current
+      label, inter-label edges survive — and finish with star (O(log n)
+      rounds, raising if not converged by ``max_iters``) on the
+      contracted graph, much smaller than the original because hash-min
+      already collapsed every shallow region.  Labels are identical to
+      either pure algorithm: after any number of hash-min rounds the true
+      component minimum m still has label(m) == m (labels never go below
+      the component min), so star over contracted nodes recovers the
+      global minimum per component, and joining back through the partial
+      labels assigns it to every node.
     """
-    if driver_edge_threshold:
-        if known_edge_count is not None:
-            if known_edge_count <= driver_edge_threshold:
-                connected_components_auto.fell_back = False
-                connected_components_auto.last_converged_in = 0
-                connected_components_auto.path = "driver"
-                return _driver_union_find(edges)
-        else:
-            probe = (
-                edges.select("src", "dst")
-                .limit(driver_edge_threshold + 1)
-                .collect()
-            )
-            if len(probe) <= driver_edge_threshold:
-                connected_components_auto.fell_back = False
-                connected_components_auto.last_converged_in = 0
-                connected_components_auto.path = "driver"
-                return _driver_union_find(edges, rows=probe)
-    connected_components_auto.path = "distributed"
-    labels = connected_components(edges, hashmin_rounds, strict=False)
-    if connected_components.last_converged_in is not None:
-        connected_components_auto.fell_back = False
-        connected_components_auto.last_converged_in = (
-            connected_components.last_converged_in
-        )
-        connected_components_auto.path = "hashmin"
-        return labels
-    connected_components_auto.fell_back = True
-    connected_components_auto.path = "hashmin+star"
+    rows = _small_edge_rows(edges, known_edge_count)
+    if rows is not None:
+        return _driver_union_find(edges, rows), {"path": "driver", "rounds": 0}
+    labels, rounds = hashmin_components(edges, HASHMIN_ROUNDS)
+    if rounds is not None:
+        return labels, {"path": "hashmin", "rounds": rounds}
     labels = labels.localCheckpoint(eager=True)
     lab_src = labels.select(F.col("doc_id").alias("src"),
                             F.col("cluster_id").alias("_ls"))
@@ -419,40 +374,14 @@ def connected_components_auto(
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    star = connected_components_star(contracted, max_iters).select(
+    star, star_rounds = star_components(contracted, max_iters)
+    star = star.select(
         F.col("doc_id").alias("_lab"), F.col("cluster_id").alias("_root")
     )
-    connected_components_auto.last_converged_in = (
-        connected_components_star.last_converged_in
+    labels = labels.join(star, F.col("cluster_id") == F.col("_lab"), "left").select(
+        "doc_id", F.coalesce("_root", "cluster_id").alias("cluster_id")
     )
-    return (
-        labels.join(star, F.col("cluster_id") == F.col("_lab"), "left")
-        .select(
-            "doc_id", F.coalesce("_root", "cluster_id").alias("cluster_id")
-        )
-    )
-
-
-def resolve_cc(algorithm: str):
-    """cc_algorithm config value → implementation."""
-    return {
-        "hashmin": connected_components,
-        "star": connected_components_star,
-        "auto": connected_components_auto,
-    }[algorithm]
-
-
-# The convergence-telemetry function attributes are driver-side mutable
-# state for run manifests: last-call-wins, read-after-the-call-you-made
-# (one pipeline per driver at a time — the documented contract).
-# Initialize at import so a manifest reader that runs before any CC call
-# (e.g. a fully-resumed pipeline skipping the components stage) reads
-# None instead of raising AttributeError.
-connected_components.last_converged_in = None
-connected_components_star.last_converged_in = None
-connected_components_auto.last_converged_in = None
-connected_components_auto.fell_back = None
-connected_components_auto.path = None
+    return labels, {"path": "hashmin+star", "rounds": HASHMIN_ROUNDS + star_rounds}
 
 
 def with_singletons(labels: DataFrame, docs: DataFrame, id_col: str = "doc_id") -> DataFrame:

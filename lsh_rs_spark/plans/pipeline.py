@@ -2,8 +2,12 @@
 
 The production `spark-submit --py-files` job (north rule): every stage
 checkpoints through the StageStore with lineage counters; a killed job
-resumes from the last committed stage; metrics (bucket stats, dropped
-hot buckets, edge counts, docs/sec) land in the run manifest.
+resumes from the last committed stage.  Each stage's manifest records its
+row count and per-file counts, and a stage that reports its own counters
+records them too (``components``: the CC ``path`` and ``rounds``).
+``_RUN_METRICS.json`` in the workdir carries, per stage, ``rows``,
+``counters`` and either ``seconds`` or ``resumed`` (a resumed stage's
+counters are read back from its manifest), plus a summary (docs/sec).
 
 Stage graph::
 
@@ -67,6 +71,9 @@ class DedupPipeline:
         self.metrics: dict = {}
 
     def _stage(self, name: str, build, parents: tuple[str, ...], resume: bool, **kw):
+        """Resume stage ``name`` or build and commit it.  ``build`` returns
+        the stage DataFrame, or ``(DataFrame, counters)`` for a stage that
+        reports counters into its manifest."""
         if resume and self.store.is_committed(name):
             m = self.store.manifest(name)
             # compare against the STORE fingerprint (== cfg.to_json() for
@@ -76,14 +83,19 @@ class DedupPipeline:
             # reads, so the idempotent stage is rebuilt
             if (m.get("config") == self.store.config_fingerprint
                     and "schema_json" in m):
-                self.metrics[name] = {"rows": m["rows"], "resumed": True}
+                self.metrics[name] = {"rows": m["rows"], "resumed": True,
+                                      "counters": m["counters"]}
                 return self.store.read(name)
             # config changed → stale checkpoint is not reusable
         t0 = time.time()
         df = build()
-        m = self.store.write(df, name, parents=parents, **kw)
-        m["seconds"] = round(time.time() - t0, 3)
-        self.metrics[name] = {"rows": m["rows"], "seconds": m["seconds"]}
+        counters = None
+        if isinstance(df, tuple):
+            df, counters = df
+        m = self.store.write(df, name, parents=parents, counters=counters, **kw)
+        self.metrics[name] = {"rows": m["rows"],
+                              "seconds": round(time.time() - t0, 3),
+                              "counters": m["counters"]}
         return self.store.read(name)
 
     def run(
@@ -139,7 +151,6 @@ class DedupPipeline:
             ("signatures",),
             resume,
             partition_by=("band_idx",),
-            sort_within=("band_key",),
         )
         self._stage(
             "bucket_stats",
@@ -183,24 +194,16 @@ class DedupPipeline:
                 )
             return e
 
-        if cfg.cc_algorithm == "auto":
-            # the stage manifests already counted both edge inputs at write
-            # time — thread the sum through so the auto path decision spawns
-            # zero extra jobs (judge r5 item 4)
-            n_edges = self.metrics["edges"]["rows"] + (
-                self.metrics["exact_groups"]["rows"] if exact_prededup else 0
-            )
-            def build_cc():
-                return CC.connected_components_auto(
-                    all_edges(), cfg.cc_max_iters, known_edge_count=n_edges
-                )
-        else:
-            cc_fn = CC.resolve_cc(cfg.cc_algorithm)
-            def build_cc():
-                return cc_fn(all_edges(), cfg.cc_max_iters)
+        # the stage manifests already counted both edge inputs at write
+        # time — the CC path decision spawns zero extra jobs
+        n_edges = self.metrics["edges"]["rows"] + (
+            self.metrics["exact_groups"]["rows"] if exact_prededup else 0
+        )
         comps = self._stage(
             "components",
-            build_cc,
+            lambda: CC.connected_components(
+                all_edges(), cfg.cc_max_iters, known_edge_count=n_edges
+            ),
             ("edges", "exact_groups"),
             resume,
         )

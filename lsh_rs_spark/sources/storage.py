@@ -180,10 +180,11 @@ class StageStore:
         name: str,
         parents: tuple[str, ...] = (),
         partition_by: tuple[str, ...] = (),
-        sort_within: tuple[str, ...] = (),
         counters: dict | None = None,
     ) -> dict:
-        """Write a stage + seal it.  Returns the manifest.
+        """Write a stage + seal it.  Returns the manifest, whose
+        ``counters`` holds what the stage reported about itself (e.g. the
+        ``components`` stage's CC path and rounds).
 
         Backend dispatch: an Iceberg catalog routes data through
         ``df.writeTo(catalog.ns.name)`` (atomic table replace — Iceberg's
@@ -192,13 +193,8 @@ class StageStore:
         the SAME manifest (written after the data commit, so a crash
         between data and manifest reruns the idempotent stage write)."""
         t0 = time.time()
-        # observed below the local sort: no exchange between it and the
-        # write, so it still counts in the write's result stage, and the
-        # sort stays visible to the optimizer's redundant-sort rules
         obs = Observation()
         df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        if sort_within:
-            df = df.sortWithinPartitions(*sort_within)
         if self.use_iceberg:
             written = self._write_iceberg(df, name, partition_by)
         else:

@@ -139,9 +139,9 @@ def test_multi_stage_graph_through_real_catalog_with_resume(catalog_spark, tmp_p
         [(1, 2), (2, 3), (10, 11)], "src: long, dst: long"
     )
     m_e = s1.write(edges, "edges", parents=("candidate_pairs",))
-    from lsh_rs_spark.operators.components import connected_components_auto
+    from lsh_rs_spark.operators.components import connected_components
 
-    comps = connected_components_auto(s1.read("edges"))
+    comps, _ = connected_components(s1.read("edges"))
     m_c = s1.write(comps, "components", parents=("edges",))
     assert m_e["rows"] == 3 and m_c["rows"] == 5
     assert m_c["parents"] == ["edges"]

@@ -154,34 +154,6 @@ def test_oph_empty_and_sparse_rows():
     assert len(np.unique(out[1])) == 16
 
 
-def test_arrow_map_signatures_equal_pandas_udf(spark):
-    """mapInArrow transport (zero-copy ListArray buffers) must produce
-    bit-identical signatures/sketches to the pandas-UDF transport."""
-    from pyspark.sql import functions as F
-
-    from lsh_rs_spark.config import DedupConfig, SimHashConfig
-    from lsh_rs_spark.operators.lsh import signatures
-    from lsh_rs_spark.operators.simhash_ops import simhash_sketches
-    from lsh_rs_spark.sources.webpages import synth_webpages, with_doc_ids
-
-    docs = with_doc_ids(synth_webpages(spark, 80, partitions=3)).cache()
-    rows = lambda df: sorted(tuple(r) for r in df.collect())
-    for fam, mode in (("xxhash64", "oph"), ("md5_64", "kperm")):
-        cfg = DedupConfig(num_perm=16, bands=4, rows_per_band=4,
-                          hash_family=fam, minhash_mode=mode)
-        a = signatures(docs, cfg, use_arrow=True)
-        b = signatures(docs, cfg, use_arrow=False)
-        assert rows(a) == rows(b)
-    scfg = SimHashConfig(n_bits=32, bands=4)
-    assert rows(simhash_sketches(docs, scfg, use_arrow=True)) == rows(
-        simhash_sketches(docs, scfg, use_arrow=False)
-    )
-    # empty input partition-safe
-    empty = docs.where(F.lit(False))
-    cfg = DedupConfig(num_perm=16, bands=4, rows_per_band=4)
-    assert signatures(empty, cfg, use_arrow=True).count() == 0
-
-
 def test_simhash_swar_kernel_matches_naive_reference():
     """The SWAR bit-parallel vote kernel (byte→lane spread + uint64
     sub-block reduceat) must reproduce the naive per-bit vote definition

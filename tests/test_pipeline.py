@@ -60,7 +60,7 @@ def test_connected_components_vs_union_find(spark):
     df = spark.createDataFrame(edges, ["src", "dst"])
     got = {
         r.doc_id: r.cluster_id
-        for r in CC.connected_components(df, max_iters=10).collect()
+        for r in CC.hashmin_components(df, max_rounds=10)[0].collect()
     }
 
     parent: dict[int, int] = {}
@@ -86,7 +86,8 @@ def test_connected_components_vs_union_find(spark):
 def test_long_chain_converges(spark):
     n = 40  # path graph: worst case for hash-min propagation
     df = spark.createDataFrame([(i, i + 1) for i in range(n)], ["src", "dst"])
-    got = CC.connected_components(df, max_iters=n + 5)
+    got, rounds = CC.hashmin_components(df, max_rounds=n + 5)
+    assert rounds is not None
     assert got.select(F.countDistinct("cluster_id")).first()[0] == 1
     assert got.agg(F.min("cluster_id")).first()[0] == 0
 
@@ -206,8 +207,6 @@ def test_star_cc_matches_hashmin_and_handles_long_chains(spark):
     """large-star/small-star CC: identical labels to hash-min on a normal
     graph, and converges on a chain whose diameter exceeds hash-min's
     default iteration budget (the silent-divergence case ADVICE flagged)."""
-    import pytest as _pytest
-
     from lsh_rs_spark.operators import components as CC
 
     # random-ish small graph: several components incl. a 40-node chain
@@ -215,48 +214,20 @@ def test_star_cc_matches_hashmin_and_handles_long_chains(spark):
     blobs = [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (20, 22)]
     edges = spark.createDataFrame(chain + blobs, "src: long, dst: long")
 
-    star = {
-        (r.doc_id, r.cluster_id)
-        for r in CC.connected_components_star(edges).collect()
-    }
+    star_labels, star_rounds = CC.star_components(edges, 40)
+    star = {(r.doc_id, r.cluster_id) for r in star_labels.collect()}
     # hash-min with enough iterations agrees exactly
     hm = {
         (r.doc_id, r.cluster_id)
-        for r in CC.connected_components(edges, max_iters=60).collect()
+        for r in CC.hashmin_components(edges, max_rounds=60)[0].collect()
     }
     assert star == hm
     # all chain nodes got the chain minimum
     assert {(i, 100) for i in range(100, 141)} <= star
-    # hash-min with a too-small budget now raises instead of silently
-    # returning wrong labels
-    with _pytest.raises(RuntimeError):
-        CC.connected_components(edges, max_iters=5, strict=True)
+    # hash-min with a too-small budget reports that it did not converge
+    assert CC.hashmin_components(edges, max_rounds=5)[1] is None
     # star converges in O(log n) rounds — far fewer than the 40-hop diameter
-    assert CC.connected_components_star.last_converged_in <= 12
-
-
-def test_cc_algorithm_knob(spark):
-    """cfg.cc_algorithm selects the CC implementation; labels identical."""
-    import pytest as _pytest
-
-    from lsh_rs_spark.api import MinHashLSH
-    from lsh_rs_spark.config import DedupConfig
-
-    with _pytest.raises(ValueError):
-        DedupConfig(cc_algorithm="bogus")
-
-    docs = spark.createDataFrame(
-        [(i, "alpha beta gamma delta epsilon zeta " + ("x" if i % 2 else "y"))
-         for i in range(12)],
-        "doc_id: long, text: string",
-    )
-    base = dict(num_perm=16, bands=4, rows_per_band=4,
-                hash_family="xxhash64", jaccard_threshold=0.5)
-    a = {(r.doc_id, r.cluster_id) for r in
-         MinHashLSH(DedupConfig(**base, cc_algorithm="hashmin")).dedup(docs).select("doc_id", "cluster_id").collect()}
-    b = {(r.doc_id, r.cluster_id) for r in
-         MinHashLSH(DedupConfig(**base, cc_algorithm="star")).dedup(docs).select("doc_id", "cluster_id").collect()}
-    assert a == b and len(a) == 12
+    assert star_rounds <= 12
 
 
 def test_connected_components_string_ids(spark):
@@ -267,14 +238,12 @@ def test_connected_components_string_ids(spark):
     edges = [(f"d{i:03d}", f"d{i + 1:03d}") for i in range(8)]
     edges += [("x1", "x2"), ("z9", "z8")]
     df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {
-        r.doc_id: r.cluster_id
-        for r in CC.connected_components(df, max_iters=15).collect()
-    }
+    labels, rounds = CC.hashmin_components(df, max_rounds=15)
+    got = {r.doc_id: r.cluster_id for r in labels.collect()}
     want = {f"d{i:03d}": "d000" for i in range(9)}
     want |= {"x1": "x1", "x2": "x1", "z8": "z8", "z9": "z8"}
     assert got == want
-    assert CC.connected_components.last_converged_in is not None
+    assert rounds is not None
 
 
 def test_stage_store_iceberg_dispatch(spark, tmp_path, monkeypatch):
@@ -382,14 +351,11 @@ def test_stage_store_commit_runs_only_the_write(spark, tmp_path):
         F.array(F.col("id"), F.lit(1).cast("long")).alias("ids"),
     )
     for name, kw in (
-        ("banded", dict(partition_by=("band_idx",), sort_within=("band_key",))),
+        ("banded", dict(partition_by=("band_idx",))),
         ("plain", {}),
     ):
         # the same write issued directly: the jobs a commit may launch
-        direct = df
-        if kw:
-            direct = df.sortWithinPartitions(*kw["sort_within"])
-        writer = direct.write.partitionBy(*kw.get("partition_by", ()))
+        writer = df.write.partitionBy(*kw.get("partition_by", ()))
         _, own_jobs = jobs_of(lambda: writer.parquet(str(tmp_path / f"ref_{name}")))
         m, write_jobs = jobs_of(lambda: store.write(df, name, **kw))
         back, read_jobs = jobs_of(lambda: store.read(name))
@@ -432,22 +398,29 @@ def test_pipeline_reruns_stage_without_recorded_schema(spark, tmp_path):
     assert "schema_json" in pipe.store.manifest("signatures")
 
 
-def test_auto_cc_shallow_graph_stays_on_hashmin(spark):
-    """cc_algorithm='auto' (the new default, judge r4 item 4): a shallow
-    graph converges inside the hash-min budget — no star fallback."""
+def test_auto_cc_shallow_graph_stays_on_hashmin(spark, monkeypatch):
+    """Distributed path (driver path forced off): a shallow graph
+    converges inside the hash-min budget — no star fallback."""
     from lsh_rs_spark.operators import components as CC
 
+    monkeypatch.setattr(CC, "DRIVER_EDGE_LIMIT", 0)
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21)], "src: long, dst: long"
     )
-    got = {(r.doc_id, r.cluster_id)
-           for r in CC.connected_components_auto(
-               edges, driver_edge_threshold=0).collect()}
+    labels, report = CC.connected_components(edges)
+    got = {(r.doc_id, r.cluster_id) for r in labels.collect()}
     assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (20, 20), (21, 20)}
-    assert CC.connected_components_auto.fell_back is False
+    assert report["path"] == "hashmin"
+    assert 1 <= report["rounds"] <= CC.HASHMIN_ROUNDS
 
 
-def test_auto_cc_1k_chain_falls_back_to_star(spark):
+def _chain_and_blob(spark):
+    chain = [(i, i + 1) for i in range(1000)]          # nodes 0..1000
+    blob = [(5000, 5001), (5001, 5002), (5000, 5002)]  # shallow component
+    return spark.createDataFrame(chain + blob, "src: long, dst: long")
+
+
+def test_auto_cc_1k_chain_falls_back_to_star(spark, monkeypatch):
     """judge r4 item 4 done-criterion: a 1000-node path graph (diameter
     999, far beyond the hash-min round budget) converges via the star
     fallback in <= ~10 star rounds, with exact labels — plus a second
@@ -455,21 +428,30 @@ def test_auto_cc_1k_chain_falls_back_to_star(spark):
     separate."""
     from lsh_rs_spark.operators import components as CC
 
-    chain = [(i, i + 1) for i in range(1000)]          # nodes 0..1000
-    blob = [(5000, 5001), (5001, 5002), (5000, 5002)]  # shallow component
-    edges = spark.createDataFrame(chain + blob, "src: long, dst: long")
-    labels = {(r.doc_id, r.cluster_id)
-              for r in CC.connected_components_auto(
-                  edges, hashmin_rounds=4, driver_edge_threshold=0).collect()}
+    monkeypatch.setattr(CC, "DRIVER_EDGE_LIMIT", 0)
+    monkeypatch.setattr(CC, "HASHMIN_ROUNDS", 4)
+    out, report = CC.connected_components(_chain_and_blob(spark))
+    labels = {(r.doc_id, r.cluster_id) for r in out.collect()}
     assert labels == (
         {(i, 0) for i in range(1001)} | {(i, 5000) for i in (5000, 5001, 5002)}
     )
-    assert CC.connected_components_auto.fell_back is True
-    assert CC.connected_components_auto.last_converged_in <= 12
+    assert report["path"] == "hashmin+star"
+    # 4 hash-min rounds, then at most 12 star rounds
+    assert 4 < report["rounds"] <= 4 + 12
 
 
-def test_auto_cc_equals_hashmin_on_random_graph(spark):
-    """auto ≡ hashmin ≡ star on a mixed random graph (forced fallback)."""
+def test_cc_raises_when_star_exhausts_max_iters(spark, monkeypatch):
+    """Unconverged labels are never returned: when the star pass has not
+    converged by max_iters the entry raises."""
+    from lsh_rs_spark.operators import components as CC
+
+    monkeypatch.setattr(CC, "DRIVER_EDGE_LIMIT", 0)
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        CC.connected_components(_chain_and_blob(spark), max_iters=2)
+
+
+def test_auto_cc_equals_hashmin_on_random_graph(spark, monkeypatch):
+    """entry ≡ hashmin ≡ star on a mixed random graph (forced fallback)."""
     import random
 
     from lsh_rs_spark.operators import components as CC
@@ -482,11 +464,13 @@ def test_auto_cc_equals_hashmin_on_random_graph(spark):
     edges_py |= {(1000 + i, 1001 + i) for i in range(30)}
     edges = spark.createDataFrame(sorted(edges_py), "src: long, dst: long")
     rows = lambda df: sorted((r.doc_id, r.cluster_id) for r in df.collect())
-    auto = rows(CC.connected_components_auto(edges, hashmin_rounds=2,
-                                             driver_edge_threshold=0))
-    assert CC.connected_components_auto.fell_back is True
-    assert auto == rows(CC.connected_components(edges, 50))
-    assert auto == rows(CC.connected_components_star(edges))
+    monkeypatch.setattr(CC, "DRIVER_EDGE_LIMIT", 0)
+    monkeypatch.setattr(CC, "HASHMIN_ROUNDS", 2)
+    labels, report = CC.connected_components(edges)
+    assert report["path"] == "hashmin+star"
+    auto = rows(labels)
+    assert auto == rows(CC.hashmin_components(edges, 50)[0])
+    assert auto == rows(CC.star_components(edges, 40)[0])
 
 
 def test_pipeline_span_cleaning_stage_with_resume(spark, tmp_path):
@@ -534,7 +518,7 @@ def test_pipeline_span_cleaning_stage_with_resume(spark, tmp_path):
 
 
 def test_auto_cc_spawns_no_count_jobs_and_single_collect(spark, monkeypatch):
-    """judge r5 item 4 + advisor: the auto path decision must not run
+    """judge r5 item 4 + advisor: the CC path decision must not run
     edges.count() — with known_edge_count (pipeline manifests) there are
     zero decision jobs; without it a single bounded limit-probe collect
     doubles as the union-find input, so the (expensive) edge lineage
@@ -547,7 +531,7 @@ def test_auto_cc_spawns_no_count_jobs_and_single_collect(spark, monkeypatch):
     cls = type(edges)
 
     def boom(self):
-        raise AssertionError("count job fired in connected_components_auto")
+        raise AssertionError("count job fired in connected_components")
 
     monkeypatch.setattr(cls, "count", boom)
     collects = {"n": 0}
@@ -560,23 +544,24 @@ def test_auto_cc_spawns_no_count_jobs_and_single_collect(spark, monkeypatch):
     monkeypatch.setattr(cls, "collect", counting_collect)
 
     # known-count path: zero decision jobs, one collect (the union-find's)
-    out = CC.connected_components_auto(edges, known_edge_count=3)
-    assert CC.connected_components_auto.path == "driver"
+    out, report = CC.connected_components(edges, known_edge_count=3)
+    assert report == {"path": "driver", "rounds": 0}
     assert collects["n"] == 1
     labels = sorted((r.doc_id, r.cluster_id) for r in orig_collect(out))
     assert labels == [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)]
 
     # probe path: ONE collect total (the probe feeds the union-find)
     collects["n"] = 0
-    out = CC.connected_components_auto(edges)
-    assert CC.connected_components_auto.path == "driver"
+    out, report = CC.connected_components(edges)
+    assert report["path"] == "driver"
     assert collects["n"] == 1
     assert sorted((r.doc_id, r.cluster_id) for r in orig_collect(out)) == labels
 
     # over-threshold probe: no count job either, falls through to distributed
     collects["n"] = 0
-    out = CC.connected_components_auto(edges, driver_edge_threshold=2)
-    assert CC.connected_components_auto.path != "driver"
+    monkeypatch.setattr(CC, "DRIVER_EDGE_LIMIT", 2)
+    out, report = CC.connected_components(edges)
+    assert report["path"] != "driver"
     # the probe is the only collect on the decision; the distributed CC's
     # own internals may collect (convergence bookkeeping) but never count
     assert sorted((r.doc_id, r.cluster_id) for r in orig_collect(out)) == labels
@@ -584,20 +569,21 @@ def test_auto_cc_spawns_no_count_jobs_and_single_collect(spark, monkeypatch):
 
 def test_pipeline_cc_stage_uses_manifest_counts(spark, tmp_path, monkeypatch):
     """The pipeline threads StageStore manifest row counts into
-    connected_components_auto so the CC stage never re-counts edges, and
-    into jaccard_edges so verify never counts the candidate pairs."""
+    connected_components so the CC stage never re-counts edges, and into
+    jaccard_edges so verify never counts the candidate pairs; the CC
+    report lands in the components manifest and the run metrics."""
     from lsh_rs_spark.config import DedupConfig
     from lsh_rs_spark.operators import components as CC
     from lsh_rs_spark.plans.pipeline import DedupPipeline
 
     seen = {}
-    orig = CC.connected_components_auto
+    orig = CC.connected_components
 
-    def spying(edges, max_iters=40, **kw):
+    def spying(edges, max_iters=25, **kw):
         seen.update(kw)
         return orig(edges, max_iters, **kw)
 
-    monkeypatch.setattr(CC, "connected_components_auto", spying)
+    monkeypatch.setattr(CC, "connected_components", spying)
     verify_kw = {}
     orig_verify = V.jaccard_edges
 
@@ -616,7 +602,6 @@ def test_pipeline_cc_stage_uses_manifest_counts(spark, tmp_path, monkeypatch):
         "doc_id: long, text: string",
     )
     cfg = DedupConfig(num_perm=16, bands=4, rows_per_band=4)
-    assert cfg.cc_algorithm == "auto"
     pipe = DedupPipeline(spark, cfg, str(tmp_path / "w"))
     pipe.run(docs, resume=False)
     assert seen.get("known_edge_count") is not None
@@ -625,12 +610,34 @@ def test_pipeline_cc_stage_uses_manifest_counts(spark, tmp_path, monkeypatch):
     )
     # verify takes its pair count from the candidate_pairs manifest too
     assert verify_kw["known_pair_count"] == pipe.metrics["candidate_pairs"]["rows"]
+    report = {"path": "driver", "rounds": 0}
+    assert pipe.store.manifest("components")["counters"] == report
+    metrics = json.load(open(tmp_path / "w" / "_RUN_METRICS.json"))
+    assert metrics["components"]["counters"] == report
 
 
-def test_auto_cc_driver_fast_path_matches_distributed(spark):
+def test_pipeline_resume_reads_cc_report_from_manifest(spark, tmp_path, monkeypatch):
+    """A resumed run reports the cold run's components counters, read back
+    from the stage manifest, in its metrics and _RUN_METRICS.json."""
+    monkeypatch.setattr(CC, "DRIVER_EDGE_LIMIT", 0)
+    # docs 0-3 are byte-identical: their exact-dup edges (a star around
+    # doc 0) form the graph, which hash-min settles in round 2
+    docs = spark.createDataFrame(
+        [(i, "one page body" if i < 4 else f"doc {i} body") for i in range(12)],
+        "doc_id: long, text: string")
+    wd = str(tmp_path / "w")
+    DedupPipeline(spark, CFG, wd).run(docs, resume=False)
+    warm = DedupPipeline(spark, CFG, wd)
+    warm.run(docs, resume=True)
+    assert warm.metrics["components"]["resumed"] is True
+    for metrics in (warm.metrics, json.load(open(f"{wd}/_RUN_METRICS.json"))):
+        assert metrics["components"]["counters"] == {"path": "hashmin", "rounds": 2}
+
+
+def test_auto_cc_driver_fast_path_matches_distributed(spark, monkeypatch):
     """Bounded driver union-find (small edge lists) produces identical
-    labels to the distributed algorithms, records path='driver', and is
-    disabled by threshold=0."""
+    labels to the distributed algorithms and reports path='driver'; over
+    the edge limit the distributed path runs."""
     import random
 
     from lsh_rs_spark.operators import components as CC
@@ -642,18 +649,20 @@ def test_auto_cc_driver_fast_path_matches_distributed(spark):
     edges_py += [(1000 + i, 1001 + i) for i in range(50)]  # long chain too
     edges = spark.createDataFrame(edges_py, "src: long, dst: long")
     rows = lambda df: sorted((r.doc_id, r.cluster_id) for r in df.collect())
-    fast = rows(CC.connected_components_auto(edges))
-    assert CC.connected_components_auto.path == "driver"
-    assert fast == rows(CC.connected_components(edges, 60))
-    slow = rows(CC.connected_components_auto(edges, driver_edge_threshold=0))
-    assert CC.connected_components_auto.path != "driver"
-    assert fast == slow
     # string ids flow through the driver path too (min on str is lexical
     # on both sides — the distributed join fallback and python min agree)
     se = spark.createDataFrame([("b", "a"), ("b", "c"), ("x", "y")],
                                "src: string, dst: string")
-    got = rows(CC.connected_components_auto(se))
+    got = rows(CC.connected_components(se)[0])
     assert got == [("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")]
+    fast, report = CC.connected_components(edges)
+    assert report["path"] == "driver"
+    fast = rows(fast)
+    assert fast == rows(CC.hashmin_components(edges, 60)[0])
+    monkeypatch.setattr(CC, "DRIVER_EDGE_LIMIT", 0)
+    slow, report = CC.connected_components(edges)
+    assert report["path"] != "driver"
+    assert fast == rows(slow)
 
 
 def test_pipeline_keep_policy_longest(spark, tmp_path):

@@ -77,7 +77,7 @@ def test_cluster_assignments_match_truth_closure(spark, corpus):
     )
     labels = {
         r.doc_id: r.cluster_id
-        for r in CC.connected_components(edges, cfg.cc_max_iters).collect()
+        for r in CC.connected_components(edges, cfg.cc_max_iters)[0].collect()
     }
 
     # union-find over the qualifying truth pairs

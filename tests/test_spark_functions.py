@@ -17,7 +17,7 @@ from lsh_rs_spark.functions.hashing import (
     md5_64_sql,
     minhash_params,
 )
-from lsh_rs_spark.functions.minhash import make_minhash_udf, minhash_exact_np
+from lsh_rs_spark.functions.minhash import make_minhash_udf, minhash_exact_np, oph_kernel
 from lsh_rs_spark.functions.shingles import (
     shingle_ids_col,
     shingles_col,
@@ -25,6 +25,7 @@ from lsh_rs_spark.functions.shingles import (
     word_shingles,
 )
 from lsh_rs_spark.functions import text as T
+from lsh_rs_spark.operators.lsh import signatures
 from lsh_rs_spark.operators.simhash_ops import simhash_sketches
 
 CFG = DedupConfig(num_perm=16, bands=4, rows_per_band=4, seed=42)
@@ -89,6 +90,17 @@ def test_minhash_udf_matches_naive_and_sql(spark, docs_df):
         want = minhash_exact_np([np.asarray(sh, dtype=np.int64)], a, b)[0]
         assert mh == want.tolist(), doc_id
         assert len(mh) == CFG.num_perm
+    # the production entry point runs the same kernels in both modes, and
+    # an empty input is partition-safe
+    for fam, mode in (("md5_64", "kperm"), ("xxhash64", "oph")):
+        cfg = DedupConfig(num_perm=16, bands=4, rows_per_band=4, seed=42,
+                          hash_family=fam, minhash_mode=mode)
+        for r in signatures(docs_df, cfg).collect():
+            sh = np.asarray(r["shingles"], dtype=np.int64)
+            want = (oph_kernel(np.array([0]), sh, 16, int(a[0]), int(b[0]))
+                    if mode == "oph" else minhash_exact_np([sh], a, b))[0]
+            assert r["minhash"] == want.tolist(), (fam, r["doc_id"])
+        assert signatures(docs_df.where(F.lit(False)), cfg).count() == 0
 
 
 def test_minhash_near_dup_signatures_mostly_agree(spark, docs_df):

@@ -69,7 +69,7 @@ from lsh_rs_spark.sources.webpages import synth_webpages, with_doc_ids
 warm = with_doc_ids(synth_webpages(spark, 2000, partitions=cores))
 wsig = L.signatures(warm, cfg).persist()
 wedges = V.jaccard_edges(L.candidate_pairs(L.explode_bands(wsig, cfg), cfg), wsig, cfg)
-CC.connected_components(wedges, 5).count()
+CC.hashmin_components(wedges, 5)[0].count()
 wsig.unpersist()
 
 t0 = time.time()
@@ -77,7 +77,7 @@ sig = L.signatures(docs, cfg).persist()
 buckets = L.explode_bands(sig, cfg)
 pairs = L.candidate_pairs(buckets, cfg).localCheckpoint(eager=True)
 edges = V.jaccard_edges(pairs, sig, cfg).localCheckpoint(eager=True)
-comps = CC.resolve_cc(cfg.cc_algorithm)(edges, cfg.cc_max_iters)
+comps, _ = CC.connected_components(edges, cfg.cc_max_iters)
 keep = CC.dedup_representatives(CC.with_singletons(comps, sig))
 removed = keep.where(~F.col("is_representative")).count()
 wall = time.time() - t0
